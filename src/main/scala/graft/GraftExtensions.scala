@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -9,16 +9,26 @@ import graft.sketches.{BloomBuildAgg, BloomMergeAgg, BloomMightContain, CmsBuild
 /**
  * SQL-surface registration for the graft sketch functions, so
  * `spark.sql("SELECT bloom_agg(x, 1000, 0.01) FROM t")` works alongside
- * the Column API in [[graft.functions]].
+ * the Column API in [[graft.functions]], plus the engine's optimizer
+ * rules and planner strategy.
  *
- * Two entry points:
+ * Three entry points:
+ *  - the `SparkSessionExtensionsProvider` service entry
+ *    (`META-INF/services`): Spark applies it to every session that
+ *    `SparkSession.builder()` creates with this jar on the classpath, so
+ *    plain user, benchmark and driver sessions all get it;
  *  - `withExtensions(new GraftExtensions)` at session build time, or
  *    `spark.sql.extensions=graft.GraftExtensions`;
- *  - [[Graft.register]] for an already-running session (used by the
- *    driver-contract paths, which receive a pre-built session).
+ *  - [[Graft.register]] for an already-running session whose builder
+ *    did not see this jar (functions only).
+ * One builder can reach the first two together; the injections are made
+ * once per `SparkSessionExtensions`, so no rule runs twice.
  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    if (GraftExtensions.applied.synchronized(GraftExtensions.applied.add(ext))) inject(ext)
+
+  private def inject(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.registrations.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
@@ -39,10 +49,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // also self-registered by PackOps.nextFitPack for extension-less
     // sessions; injecting it here covers plans built some other way
     ext.injectPlannerStrategy(_ => graft.operators.NextFitPackStrategy)
+    // a sketch joined from a one-row side is probed as a task constant
+    // (scalar subquery) instead of being copied into every row; runs in
+    // the operator-optimization fixpoint so CollapseProject folds the
+    // subquery into the probe
+    ext.injectOptimizerRule(graft.plans.OneRowSketchJoinRule)
   }
 }
 
 object GraftExtensions {
+  /** Extension sets already given the graft injections (weak keys: a set
+    * lives as long as the sessions built from it). */
+  private val applied = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean])
+
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 

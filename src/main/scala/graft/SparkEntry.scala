@@ -21,9 +21,10 @@ object SparkEntry {
   /**
    * Flagship (smoke) query — the reference's signature computation in
    * batch form: per-event-type exact count vs Count-Min-Sketch estimate.
-   * Sketch built distributed (partial+final agg), kept as a one-row
-   * BinaryType relation, broadcast to the probe side — no driver
-   * round-trip (SURVEY.md §3.3).
+   * Sketch built distributed (partial+final agg) as a one-row BinaryType
+   * relation joined to the probe side; OneRowSketchJoinRule plans it as
+   * a scalar subquery, so the sketch reaches the probe as one task
+   * constant — no driver round-trip, no per-row copy (SURVEY.md §3.3).
    */
   def entry(spark: SparkSession): DataFrame =
     SketchQueries.queries("q_cms_event_counts")(spark, "/root/testdata/sf0.001")

@@ -99,7 +99,10 @@ object SketchQueries {
       // by the eps floor (the floor exists precisely to bound this
       // object), the documented bounded-collect class. Same rows, same
       // gate hashes; this is also the 100 TB shape — a probe-side sketch
-      // is task state, never row payload.
+      // is task state, never row payload. The join form needs no such
+      // workaround: OneRowSketchJoinRule plans a one-row sketch join as
+      // a scalar subquery (no driver collect). This query keeps its
+      // literal because the regime gate also needs n_total on the driver.
       val skRow = ev.agg(cms_agg(col("user_id"), eps, conf, 42).as("sk"),
         count(lit(1)).as("n_total")).head
       val skBytes = skRow.getAs[Array[Byte]]("sk")

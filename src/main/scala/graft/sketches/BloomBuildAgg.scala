@@ -51,9 +51,21 @@ case class BloomBuildAgg(
   override def third: Expression = fppExpr
 
   override def checkInputDataTypes(): TypeCheckResult = {
+    // the VALUES are checked here too: BloomFilter.create rejects them
+    // only inside a task, as a mid-job failure
+    def num(e: Expression): Option[Number] = e.eval() match {
+      case v: Number => Some(v)
+      case _ => None
+    }
     if (!estimatedItemsExpr.foldable || !fppExpr.foldable) {
       TypeCheckResult.TypeCheckFailure(
         "bloom_agg expectedItems and fpp must be constants")
+    } else if (!num(estimatedItemsExpr).exists(_.longValue() > 0)) {
+      TypeCheckResult.TypeCheckFailure(
+        s"bloom_agg expectedItems must be a positive integer, got ${estimatedItemsExpr.eval()}")
+    } else if (!num(fppExpr).map(_.doubleValue()).exists(p => p > 0 && p < 1)) {
+      TypeCheckResult.TypeCheckFailure(
+        s"bloom_agg fpp must be in (0, 1), got ${fppExpr.eval()}")
     } else child.dataType match {
       case LongType | IntegerType | ShortType | ByteType | StringType | BinaryType =>
         TypeCheckResult.TypeCheckSuccess

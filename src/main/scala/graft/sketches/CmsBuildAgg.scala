@@ -52,8 +52,20 @@ case class CmsBuildAgg(
   override def fourth: Expression = seedExpr
 
   override def checkInputDataTypes(): TypeCheckResult = {
+    // the VALUES are checked here too: CountMinSketch.create rejects them
+    // only inside a task, as a mid-job failure
+    def num(e: Expression): Option[Double] = e.eval() match {
+      case v: Number => Some(v.doubleValue())
+      case _ => None
+    }
     if (!epsExpr.foldable || !confidenceExpr.foldable || !seedExpr.foldable) {
       TypeCheckResult.TypeCheckFailure("cms_agg eps/confidence/seed must be constants")
+    } else if (!num(epsExpr).exists(_ > 0)) {
+      TypeCheckResult.TypeCheckFailure(
+        s"cms_agg eps must be positive, got ${epsExpr.eval()}")
+    } else if (!num(confidenceExpr).exists(c => c > 0 && c < 1)) {
+      TypeCheckResult.TypeCheckFailure(
+        s"cms_agg confidence must be in (0, 1), got ${confidenceExpr.eval()}")
     } else child.dataType match {
       case LongType | IntegerType | ShortType | ByteType | StringType | BinaryType =>
         TypeCheckResult.TypeCheckSuccess

@@ -69,13 +69,16 @@ object CuckooTable {
   }
 
   // Per-thread memo of the last deserialized table, keyed by byte-array
-  // IDENTITY: the common probe shape is a foldable/broadcast sketch
-  // whose literal byte array is the SAME object for every row a task
+  // IDENTITY: the common probe shape is a literal or scalar-subquery
+  // sketch, whose byte array is the SAME object for every row a task
   // probes, so without this every row pays an O(m) ByteBuffer copy —
-  // the probe would be O(filter size) per row instead of O(1). Probes
-  // only read the cached table (delete goes through CuckooOps on a
-  // fresh deserialize), so sharing it across rows is safe; a different
-  // array instance simply misses and re-deserializes.
+  // the probe would be O(filter size) per row instead of O(1). A sketch
+  // read from a joined column is a fresh copy per row and always misses
+  // (OneRowSketchJoinRule turns the one-row broadcast join into a scalar
+  // subquery for that reason); a sketch that really varies per row
+  // deserializes per row. Probes only read the cached table (delete
+  // goes through CuckooOps on a fresh deserialize), so sharing it
+  // across rows is safe.
   // SoftReference so a long-lived executor thread pool does not pin the
   // last sketch (bytes + decoded table can be MBs) past the query that
   // used it: the JVM clears soft refs under memory pressure, turning the

@@ -10,12 +10,19 @@ import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
 /**
  * Shared plumbing for scalar probes over a serialized sketch column.
  *
- * The sketch argument is usually query-constant (a scalar subquery or a
- * broadcast one-row join), so each expression instance keeps a one-entry
- * deserialization cache keyed by array identity-then-content; repeated
- * probes against the same sketch pay a single `readFrom`. When the column
- * genuinely varies per row (e.g. one sketch per group), the cache misses
- * and we deserialize per row — still correct, just slower.
+ * The sketch argument is usually query-constant: a literal, or a scalar
+ * subquery, which Spark inlines into the generated code as a literal —
+ * one array object per task. Each expression instance keeps a one-entry
+ * deserialization cache keyed by array identity, so repeated probes
+ * against that array pay a single `readFrom`. A sketch joined from a
+ * one-row side would instead be a column: every row reads it through
+ * `UnsafeRow.getBinary`, a fresh copy of the whole sketch, which misses
+ * on identity and costs a full content compare (O(sketch size) per row)
+ * before it hits; [[graft.plans.OneRowSketchJoinRule]] rewrites that
+ * join to a scalar subquery. When the column genuinely varies per row
+ * (e.g. one sketch per group, joined on the group key), the content
+ * compare keeps rows of one group from re-deserializing, and a change
+ * of sketch deserializes again — still correct, just slower.
  *
  * Both probes generate code (no `CodegenFallback`), so a
  * `filter(bloom_might_contain(...))` stays inside whole-stage codegen —
